@@ -381,13 +381,13 @@ def compact_bench_line(out: dict, max_line: int = _MAX_LINE) -> str:
         compact["q_dropped"] = dropped
         line = json.dumps(compact, separators=(",", ":"))
     # last-ditch: the tail-window guarantee must hold unconditionally
-    # (r8 advice) even if the contract keys alone ever outgrow it.
+    # (r8 advice) even if the contract keys alone ever outgrow it. The
+    # map's annotations go with it: a q_dropped or q_1dp left without a
+    # queries map would describe walls the line no longer carries.
     if len(line) > max_line:
-        for key in ("queries", "q_dropped"):
+        for key in ("queries", "q_dropped", "q_1dp"):
             compact.pop(key, None)
-            line = json.dumps(compact, separators=(",", ":"))
-            if len(line) <= max_line:
-                break
+        line = json.dumps(compact, separators=(",", ":"))
     return line
 
 

@@ -79,17 +79,56 @@ _SLOW_TESTS = {
 }
 
 
+def _command_line_targets(config) -> list[tuple[Path, str]]:
+    """(resolved path, node selector or "") for every command-line arg."""
+    base = Path(config.invocation_params.dir)
+    out = []
+    for arg in config.args:
+        path, _, sel = str(arg).partition("::")
+        out.append(((base / path).resolve(), sel))
+    return out
+
+
 def pytest_collection_modifyitems(config, items):
     slow = pytest.mark.slow
+    matched = set()
     for item in items:
         key = (item.fspath.basename, item.name.split("[")[0])
         if key in _SLOW_TESTS:
             item.add_marker(slow)
+            matched.add(key)
+    targets = _command_line_targets(config)
+    tests_dir = REPO / "tests"
+    if any(not sel and (p == tests_dir or p in tests_dir.parents) for p, sel in targets):
+        # the whole suite is collected: a roster entry that matches nothing
+        # is a renamed or deleted test the full tier claims to run (a file
+        # that collected no items is already reported as a collection error)
+        collected = {item.fspath.basename for item in items}
+        stale = sorted(
+            (f, t)
+            for f, t in _SLOW_TESTS - matched
+            if f in collected or not (tests_dir / f).exists()
+        )
+        if stale:
+            raise pytest.UsageError(f"_SLOW_TESTS entries match no test: {stale}")
     if os.environ.get("WSP_FULL_TESTS"):
         return
+    # a slow test named by node id on the command line runs
+    named = [(p, sel) for p, sel in targets if sel]
+
+    def named_explicitly(item) -> bool:
+        rest = item.nodeid.partition("::")[2]
+        return any(
+            item.path == p and (rest == sel or rest.startswith((sel + "[", sel + "::")))
+            for p, sel in named
+        )
+
     selected, deselected = [], []
     for item in items:
-        (deselected if "slow" in item.keywords else selected).append(item)
+        if "slow" in item.keywords and not named_explicitly(item):
+            deselected.append(item)
+        else:
+            selected.append(item)
     if deselected:
         config.hook.pytest_deselected(items=deselected)
         items[:] = selected

@@ -73,3 +73,15 @@ def test_degradation_sheds_metadata_before_walls_and_is_bounded() -> None:
     # metadata shed first; whatever queries remain are honest about drops
     if set(parsed.get("queries", {})) != set(names):
         assert parsed.get("q_dropped", 0) > 0
+
+
+def test_last_ditch_drops_the_map_with_its_annotations() -> None:
+    # budgets too small for even an empty queries map: the map goes, and
+    # q_dropped / q_1dp must go with it rather than describe walls the
+    # line no longer carries
+    names = list(HEADLINE)
+    for budget in range(60, 700):
+        parsed = json.loads(compact_bench_line(_detail(names), max_line=budget))
+        if "queries" not in parsed:
+            assert "q_dropped" not in parsed, budget
+            assert "q_1dp" not in parsed, budget

@@ -14,6 +14,13 @@ its in-code boundedness comment) is updated.
 Sites are keyed (file, enclosing function, method) with multiplicity —
 stable under line shifts and unrelated edits, specific enough that a new
 collect in a new function always trips.
+
+The same walker pins the lineage-cut surface: ``checkpoint`` /
+``localCheckpoint`` / ``persist`` / ``cache`` may appear only inside
+``plans/caching.py``, the one module that knows how a cut is made (and
+that ``lazy_cuts()`` can switch off). Operators cut through its
+``truncate_lineage`` / ``persisted_result``; a second copy of the helper
+anywhere else fails here.
 """
 
 from __future__ import annotations
@@ -24,6 +31,7 @@ import pathlib
 _ROOT = pathlib.Path(__file__).resolve().parent.parent
 _SRC = _ROOT / "weather_stream_processor_spark"
 _METHODS = {"collect", "first", "toPandas"}
+_CUT_METHODS = {"checkpoint", "localCheckpoint", "persist", "cache"}
 
 # (file, enclosing function, method) -> site count; the boundedness
 # argument lives as a comment AT the call site in each file.
@@ -61,7 +69,15 @@ ALLOWLIST: dict[tuple[str, str, str], int] = {
 }
 
 
-def _scan() -> dict[tuple[str, str, str], int]:
+# (file, enclosing function, method) -> site count for the cut methods
+CUT_ALLOWLIST: dict[tuple[str, str, str], int] = {
+    ("plans/caching.py", "persisted_result", "persist"): 1,
+    ("plans/caching.py", "truncate_lineage", "checkpoint"): 1,
+    ("plans/caching.py", "truncate_lineage", "localCheckpoint"): 1,
+}
+
+
+def _scan(methods: set[str] = _METHODS) -> dict[tuple[str, str, str], int]:
     sites: dict[tuple[str, str, str], int] = {}
     for p in sorted(_SRC.rglob("*.py")):
         tree = ast.parse(p.read_text())
@@ -74,7 +90,7 @@ def _scan() -> dict[tuple[str, str, str], int]:
             if (
                 isinstance(node, ast.Call)
                 and isinstance(node.func, ast.Attribute)
-                and node.func.attr in _METHODS
+                and node.func.attr in methods
             ):
                 key = (rel, name or "<module>", node.func.attr)
                 sites[key] = sites.get(key, 0) + 1
@@ -93,4 +109,13 @@ def test_every_driver_materialization_is_allowlisted():
         "driver-side materialization surface changed.\n"
         f"NEW/CHANGED (add an in-code boundedness comment + allowlist): {new}\n"
         f"STALE allowlist entries (remove them): {gone}"
+    )
+
+
+def test_lineage_cuts_live_only_in_caching_module():
+    found = _scan(_CUT_METHODS)
+    assert found == CUT_ALLOWLIST, (
+        "checkpoint/localCheckpoint/persist/cache outside the allowlist: "
+        "cut through plans.caching.truncate_lineage / persisted_result.\n"
+        f"found: {found}"
     )

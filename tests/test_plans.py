@@ -23,6 +23,15 @@ def _df(spark, name, sf=SF_SMOKE):
     return all_queries()[name].builder(spark, sf)
 
 
+def _lazy_df(spark, name, sf=SF_SMOKE):
+    """The registered builder's own plan with every lineage cut lazy — the
+    eager form would hide the tree behind checkpoint scans."""
+    from weather_stream_processor_spark.plans.caching import lazy_cuts
+
+    with lazy_cuts():
+        return _df(spark, name, sf)
+
+
 def test_q1_pushdown_and_pruning(spark):
     df = _df(spark, "q1_pricing_summary")
     # the shipdate predicate reaches the parquet scan...
@@ -234,12 +243,11 @@ def test_exact_ntile_has_no_single_reducer_window(spark):
     # must rank inside coarse-bucket partitions — an unpartitioned window
     # would plan as Exchange SinglePartition feeding Sort+Window, so the
     # absence of SinglePartition anywhere IS the scale property under test
-    from weather_stream_processor_spark.operators.analytics import rfm_lazy_plan
     from weather_stream_processor_spark.plans import explain_string
 
-    lazy = {"rfm_segments": rfm_lazy_plan}  # registered form is materialized
     for name in ("ntile_order_quartiles", "rfm_segments", "orders_global_rank"):
-        df = lazy[name](spark, SF_SMOKE) if name in lazy else _df(spark, name)
+        # rfm_segments' registered form is materialized: inspect it lazily
+        df = _lazy_df(spark, name) if name == "rfm_segments" else _df(spark, name)
         plan = explain_string(df, "formatted")
         assert "Window" in plan, name
         assert "SinglePartition" not in plan, name
@@ -269,13 +277,12 @@ def test_prefix_filter_join_is_all_hash_joins(spark):
     # candidate generation and verification are equi-joins on shingle
     # hashes — any CartesianProduct/BroadcastNestedLoop here would be the
     # all-pairs blowup prefix filtering exists to avoid
-    from weather_stream_processor_spark.operators.dedup import prefix_filter_lazy_plan
-
     # the registered form materializes + unpersists (cache-leak fix), so
     # inspect the lazy tree it executes
-    ops = operator_names(prefix_filter_lazy_plan(spark, SF_SMOKE))
+    df = _lazy_df(spark, "prefix_filter_jaccard_join")
+    ops = operator_names(df)
     assert not any("Cartesian" in o or "NestedLoop" in o for o in ops)
-    for cols in read_schema_columns(prefix_filter_lazy_plan(spark, SF_SMOKE)):
+    for cols in read_schema_columns(df):
         assert set(cols) <= {"doc_id", "text"}
 
 
@@ -284,11 +291,10 @@ def test_pagerank_iterations_stay_broadcast(spark):
     # must be broadcast. The basket-array pair builder has no self-join at
     # all now, so NO shuffle join of any kind may appear — a SortMergeJoin
     # would mean an iteration shuffles the edge list. The registered
-    # builder persists the edges, so inspect the lazy twin.
-    from weather_stream_processor_spark.operators.analytics import pagerank_plan
+    # builder cuts the edges, so inspect its lazy plan.
     from weather_stream_processor_spark.plans import explain_string
 
-    plan = explain_string(pagerank_plan(spark, SF_SMOKE), "formatted")
+    plan = explain_string(_lazy_df(spark, "pagerank_brand_graph"), "formatted")
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
     assert "SortMergeJoin" not in plan
@@ -439,17 +445,12 @@ def test_allknn_no_cartesian_and_pruned_scan(spark):
 def test_degree_assortativity_broadcasts_degrees(spark):
     # degree table is |brands|-sized: joined back broadcast, reduced by
     # the built-in corr aggregate. The registered builder persists the
-    # edge list (5 consuming subtrees), so inspect the lazy twin. The
+    # edge list (5 consuming subtrees), so inspect its lazy plan. The
     # edge builder's own orderkey self-join is a keyed SMJ (correct: both
     # sides are fact-sized at scale) — only the assortativity suffix must
     # broadcast, so count: the lazy tree's SMJs all join on the orderkey.
-    from weather_stream_processor_spark.operators.analytics import (
-        degree_assortativity_plan,
-    )
-    from tests.conftest import SF_SMOKE as _SF
-
     require_plan(
-        degree_assortativity_plan(spark, _SF),
+        _lazy_df(spark, "degree_assortativity"),
         contains=("BroadcastHashJoin",),
         not_contains=("CartesianProduct",),
     )
@@ -483,12 +484,12 @@ def test_normalization_dedup_shuffles_digests_only(spark):
 
 
 def test_kcore_round_joins_broadcast_keep_list(spark):
-    # one peeling round: degree agg + two broadcast semi-joins of the
-    # |nodes|-bounded keep list — the edge list must never SMJ-shuffle
-    from weather_stream_processor_spark.operators.analytics import kcore_plan
-
+    # every peeling round: degree agg + two broadcast semi-joins of the
+    # |nodes|-bounded keep list — the edge list must never SMJ-shuffle.
+    # The registered builder cuts lineage per round; its lazy plan chains
+    # the rounds it ran
     require_plan(
-        kcore_plan(spark, SF_SMOKE),
+        _lazy_df(spark, "kcore_decomposition"),
         contains=("BroadcastHashJoin",),
         not_contains=("SortMergeJoin", "CartesianProduct"),
     )
@@ -714,10 +715,8 @@ def test_encoding_advisor_profiles_all_columns_in_one_scan(spark):
 
 def test_adamic_adar_scan_pruned_and_no_cartesian(spark):
     # the registered builder persists the support-edge list (it feeds
-    # three subtrees) and truncates lineage; inspect the lazy twin
-    from weather_stream_processor_spark.operators.analytics import aa_plan
-
-    df = aa_plan(spark, SF_SMOKE)
+    # three subtrees) and truncates lineage; inspect its lazy plan
+    df = _lazy_df(spark, "adamic_adar_link_prediction")
     require_plan(
         df,
         contains=("TakeOrderedAndProject",),
@@ -731,9 +730,7 @@ def test_textrank_rounds_broadcast_rank_vector(spark):
     # each TextRank round joins the edge list against the O(|vocab'|)
     # rank and weighted-degree tables: both must broadcast so a round
     # never re-shuffles the edges (same pin as pagerank)
-    from weather_stream_processor_spark.operators.text import textrank_plan
-
-    ops = operator_names(textrank_plan(spark, SF_SMOKE))
+    ops = operator_names(_lazy_df(spark, "textrank_keyphrases"))
     assert any("BroadcastHashJoin" in o for o in ops), ops
     assert "SortMergeJoin" not in ops
     assert "CartesianProduct" not in ops
@@ -758,13 +755,9 @@ def test_target_encoding_one_scan_no_join(spark):
 
 
 def test_t_closeness_scans_documents_once_lazy(spark):
-    # the persisted builder cuts lineage; the lazy twin must show the
+    # the persisted builder cuts lineage; its lazy plan must show the
     # grid construction uses broadcasts for the global tables
-    from weather_stream_processor_spark.operators.evals import (
-        t_closeness_plan,
-    )
-
-    ops = operator_names(t_closeness_plan(spark, SF_SMOKE))
+    ops = operator_names(_lazy_df(spark, "t_closeness_audit"))
     assert "CartesianProduct" not in ops
     assert "SortMergeJoin" not in ops
 

@@ -673,7 +673,7 @@ JOIN_ALLOWLIST: dict[str, tuple[tuple[str, ...], str]] = {
     # release_audit_report's bounded crosses moved behind the r11 flags
     # lineage cut (they execute inside the gate-union job, not the
     # registered plan) — entry removed when the guard flagged it stale.
-    # r12: the LAZY flags-union twin is audited explicitly by
+    # The report built under lazy_cuts() is audited explicitly by
     # tests/test_r12_guard.py::test_release_audit_gate_union_surface, so
     # the eager cut no longer shrinks guard coverage (r11 advice).
     'rocchio_query_expansion': (

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from weather_stream_processor_spark.plans.caching import truncate_lineage
 from weather_stream_processor_spark.plans.convergence import guard_converged
 from weather_stream_processor_spark.registry import register
 from weather_stream_processor_spark.sources import load_table
@@ -110,8 +111,7 @@ def rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tiny-output passes (cutoffs, per-bucket counts) before the final
     # one — don't re-run the groupBy; the wrapper releases the cache once
     # the O(customers) scored output is materialized (r3 advice: the bare
-    # persist leaked a cached copy per invocation). Plan tests inspect
-    # the lazy tree via rfm_lazy_plan.
+    # persist leaked a cached copy per invocation).
     return persisted_result(_rfm_aggregate(spark, sf_dir), _rfm_tree)
 
 
@@ -122,12 +122,6 @@ def _rfm_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("frequency"),
         F.sum(_cents("o_totalprice")).alias("monetary_cents"),
     )
-
-
-def rfm_lazy_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The un-materialized rfm_segments plan (no persist, no lineage cut)
-    — for plan-shape inspection in tests."""
-    return _rfm_tree(_rfm_aggregate(spark, sf_dir))
 
 
 def _rfm_tree(agg: DataFrame) -> DataFrame:
@@ -338,7 +332,6 @@ def _co_purchase_support(spark: SparkSession, sf_dir: str) -> DataFrame:
     a bit-identical pair table. Per-order brand sets are bounded by the
     brand domain, so the array expansion is O(|basket|^2) per row with a
     tiny constant — the same bound the self-join had per orderkey group."""
-    from weather_stream_processor_spark.plans.caching import truncate_lineage
 
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part")
@@ -503,15 +496,7 @@ def pagerank_brand_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the co-purchase join execute once instead of ~3x per round (the r9
     # persist form measured 15.2 s -> 3 s at sf0.1; the cut+repartition
     # form shaves the doubled round stages on top, 4.04 -> 3.46 s)
-    from weather_stream_processor_spark.operators.dedup import _truncate_lineage
-
-    return _truncate_lineage(_pagerank_tree(_brand_median_edges(spark, sf_dir)))
-
-
-def pagerank_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The un-materialized pagerank plan (no persist, no lineage cut) —
-    for plan-shape inspection in tests."""
-    return _pagerank_tree(_brand_median_edges(spark, sf_dir, cut=False))
+    return truncate_lineage(_pagerank_tree(_brand_median_edges(spark, sf_dir)))
 
 
 def _pagerank_tree(edges: DataFrame) -> DataFrame:
@@ -843,9 +828,7 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
     # _brand_median_edges (see its docstring), so the rounds run over a
     # materialized right-sized frame; the result cut keeps the
     # persisted_result contract (O(result) storage, nothing cached).
-    from weather_stream_processor_spark.operators.dedup import _truncate_lineage
-
-    return _truncate_lineage(
+    return truncate_lineage(
         _lpa_rounds(_brand_median_edges(spark, sf_dir), _LPA_ITERS)
     )
 
@@ -877,9 +860,7 @@ def _lpa_rounds(edges: DataFrame, iters: int) -> DataFrame:
     )
 
 
-def _brand_median_edges(
-    spark: SparkSession, sf_dir: str, cut: bool = True
-) -> DataFrame:
+def _brand_median_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Undirected (both directions) above-MEDIAN-support co-purchase edges —
     the pagerank_brand_graph construction, shared by label propagation.
     Pair counts come from the shared basket-array builder.
@@ -890,19 +871,13 @@ def _brand_median_edges(
     task scheduling, not compute. repartition("src") lets AQE size the
     frame to its bytes (REPARTITION_BY_COL allows coalescing) and the
     lineage cut materializes it once for all rounds. A/B on pagerank at
-    sf0.1 (interleaved, 3 pairs): 4.04 → 3.46 s min-of-3. ``cut=False``
-    keeps the lazy twin un-truncated for plan-shape tests."""
+    sf0.1 (interleaved, 3 pairs): 4.04 → 3.46 s min-of-3."""
     pairs = _co_purchase_support(spark, sf_dir)
     q = pairs.agg(F.percentile("support", F.lit(0.5)).alias("q"))
     kept = pairs.crossJoin(F.broadcast(q)).filter(F.col("support") > F.col("q"))
     fwd = kept.select(F.col("b1").alias("src"), F.col("b2").alias("dst"))
     rev = kept.select(F.col("b2").alias("src"), F.col("b1").alias("dst"))
-    edges = fwd.unionAll(rev)
-    if not cut:
-        return edges
-    from weather_stream_processor_spark.operators.dedup import _truncate_lineage
-
-    return _truncate_lineage(edges.repartition("src"))
+    return truncate_lineage(fwd.unionAll(rev).repartition("src"))
 
 
 _PATH_LEN = 5
@@ -1306,12 +1281,6 @@ def degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def degree_assortativity_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The un-materialized plan (no persist, no lineage cut) — for
-    plan-shape inspection in tests."""
-    return _degree_assortativity_tree(_brand_edges(spark, sf_dir))
-
-
 def _degree_assortativity_tree(edges: DataFrame) -> DataFrame:
     und = edges.select(
         F.col("b1").alias("src"), F.col("b2").alias("dst")
@@ -1410,34 +1379,14 @@ def kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     return persisted_result(_brand_edges(spark, sf_dir), _kcore_tree)
 
 
-def kcore_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ONE un-truncated peeling round over the lazy edge builder — the
-    repeated unit of the k-core loop, for plan-shape inspection (the
-    registered builder truncates lineage per round, which hides the
-    round's join shape behind checkpoint scans)."""
-    edges = _brand_edges(spark, sf_dir)
-    e = edges.select(F.col("b1").alias("src"), F.col("b2").alias("dst")).unionAll(
-        edges.select(F.col("b2").alias("src"), F.col("b1").alias("dst"))
-    )
-    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
-    keep = deg.filter(F.col("d") >= _KCORE_K).select("src")
-    return (
-        e.join(F.broadcast(keep), "src")
-        .join(F.broadcast(keep.withColumnRenamed("src", "dst")), "dst")
-        .select("src", "dst")
-    )
-
-
 def _kcore_tree(edges: DataFrame) -> DataFrame:
-    from weather_stream_processor_spark.operators.dedup import _truncate_lineage
-
     # each round references the previous round's edges THREE times (the
     # main join input + both keep-list broadcast builds), so an un-cut
     # lazy chain re-executes prior rounds ~3^i times — lineage is
     # truncated per round exactly as the CC loop does. The convergence
     # break collects a single count (bounded: one row), so a graph whose
     # cascade stops early never pays the remaining rounds.
-    e = _truncate_lineage(
+    e = truncate_lineage(
         edges.select(F.col("b1").alias("src"), F.col("b2").alias("dst")).unionAll(
             edges.select(F.col("b2").alias("src"), F.col("b1").alias("dst"))
         )
@@ -1452,7 +1401,7 @@ def _kcore_tree(edges: DataFrame) -> DataFrame:
     for i in range(_KCORE_ROUNDS + 1):
         deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
         keep = deg.filter(F.col("d") >= _KCORE_K).select("src")
-        nxt = _truncate_lineage(
+        nxt = truncate_lineage(
             e.join(F.broadcast(keep), "src")
             .join(
                 F.broadcast(keep.withColumnRenamed("src", "dst")),
@@ -1543,14 +1492,12 @@ def bfs_shortest_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _bfs_tree(edges: DataFrame) -> DataFrame:
-    from weather_stream_processor_spark.operators.dedup import _truncate_lineage
-
-    e = _truncate_lineage(
+    e = truncate_lineage(
         edges.select(F.col("b1").alias("src"), F.col("b2").alias("dst")).unionAll(
             edges.select(F.col("b2").alias("src"), F.col("b1").alias("dst"))
         )
     )
-    dist = _truncate_lineage(
+    dist = truncate_lineage(
         e.agg(F.min("src").alias("node")).select("node", F.lit(0).alias("dist"))
     )
     prev = None
@@ -1562,7 +1509,7 @@ def _bfs_tree(edges: DataFrame) -> DataFrame:
         relaxed = e.join(
             F.broadcast(dist.withColumnRenamed("node", "src")), "src"
         ).select(F.col("dst").alias("node"), (F.col("dist") + 1).alias("dist"))
-        nxt = _truncate_lineage(
+        nxt = truncate_lineage(
             dist.unionAll(relaxed).groupBy("node").agg(F.min("dist").alias("dist"))
         )
         # 1-row convergence checksum (same class as the CC loop's): the
@@ -1668,7 +1615,6 @@ def kaplan_meier_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("churned"),
         )
     )
-    from weather_stream_processor_spark.plans.caching import truncate_lineage
 
     # day-span-bounded grid, eagerly checkpointed (r11 scan audit, with
     # the weibull fit): the customer-scale aggregate and its orders
@@ -1830,7 +1776,6 @@ def weibull_survival_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("churned"),
         )
     )
-    from weather_stream_processor_spark.plans.caching import truncate_lineage
 
     # day-span-bounded grid, eagerly checkpointed: the customer-scale
     # per_cust lineage (and its orders scans) runs exactly once, with
@@ -2324,8 +2269,6 @@ def _hits_tree(edges: DataFrame) -> DataFrame:
     # but an un-cut chain nests one broadcast stage per prior half-round
     # and re-executes the normalization aggregates (measured 110 s -> ~3 s
     # at sf0.01) — the markov/k-core/BFS pattern
-    from weather_stream_processor_spark.operators.dedup import _truncate_lineage
-
     n_cust = edges.agg(F.countDistinct("custkey").cast("double").alias("n"))
     hubs = (
         edges.select("custkey")
@@ -2341,7 +2284,7 @@ def _hits_tree(edges: DataFrame) -> DataFrame:
         # crossJoin stage, no second cut, and NOT an unpartitioned window
         # (the hub vector is O(|customers|); a single-partition window
         # over it would serialize at scale)
-        raw = _truncate_lineage(raw)
+        raw = truncate_lineage(raw)
         t = raw.agg(F.sum("s")).collect()[0][0]
         return raw.select(key, (F.col("s") / F.lit(float(t))).alias("score"))
 
@@ -2665,11 +2608,6 @@ def adamic_adar_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     # edges -> wedges twice + degree, and the existing-edge anti-join):
     # persist it so the basket pair join executes once
     return persisted_result(_aa_support_edges(spark, sf_dir), _aa_tree)
-
-
-def aa_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Un-materialized Adamic-Adar plan for plan-shape tests."""
-    return _aa_tree(_aa_support_edges(spark, sf_dir))
 
 
 def _aa_support_edges(spark: SparkSession, sf_dir: str) -> DataFrame:

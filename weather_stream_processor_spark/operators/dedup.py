@@ -23,6 +23,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from weather_stream_processor_spark.functions import tokens, word_shingles
+from weather_stream_processor_spark.plans.caching import (
+    persisted_result,
+    truncate_lineage,
+)
 from weather_stream_processor_spark.plans.convergence import guard_converged
 from weather_stream_processor_spark.registry import register
 from weather_stream_processor_spark.sources import load_table, spread
@@ -241,11 +245,11 @@ def _ngram_jaccard_core(docs: DataFrame, contract: bool | None = None) -> DataFr
 
         with ThreadPoolExecutor(max_workers=1) as pool:
             fut = pool.submit(_dup_rate_row)
-            exploded = _truncate_lineage(_exploded_shingles(docs, hashed=True))
+            exploded = truncate_lineage(_exploded_shingles(docs, hashed=True))
             r = fut.result()
         contract = r.n > 0 and (1.0 - r.d / r.n) >= _CONTRACT_DUP_GATE
     else:
-        exploded = _truncate_lineage(_exploded_shingles(docs, hashed=True))
+        exploded = truncate_lineage(_exploded_shingles(docs, hashed=True))
     if not contract:
         a = exploded.alias("a")
         b = exploded.alias("b")
@@ -262,7 +266,7 @@ def _ngram_jaccard_core(docs: DataFrame, contract: bool | None = None) -> DataFr
     wsig = Window.partitionBy("n_shingles", "sig_xor", "sig_min", "sig_max")
     # (doc_id, rep_id) for every doc with >= 1 shingle; doc-scale, two
     # longs — cut so the four consumers below read one materialization
-    cls = _truncate_lineage(
+    cls = truncate_lineage(
         sigs.select("doc_id", F.min("doc_id").over(wsig).alias("rep_id"))
     )
     reps = cls.filter(F.col("doc_id") == F.col("rep_id")).select("doc_id")
@@ -428,7 +432,7 @@ def minhash_lsh_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # consumer (8 scans in the formatted plan). The index is O(docs) rows
     # of longs: lineage-cut it so the signature pipeline runs ONCE
     # (A/B at sf0.1: 2.95 → 1.72 s cold, bench min 1.76 → ~1.1 s).
-    per_doc = _truncate_lineage(_doc_index(docs))
+    per_doc = truncate_lineage(_doc_index(docs))
     r = N_HASHES // N_BANDS
     bands = per_doc.select(
         "doc_id",
@@ -653,21 +657,6 @@ def _simhash_buckets_core(docs_in: DataFrame) -> DataFrame:
     )
 
 
-def _truncate_lineage(df: DataFrame) -> DataFrame:
-    """Cut an iterative plan's lineage between rounds.
-
-    When a reliable checkpoint dir is configured
-    (``sc.setCheckpointDir`` — the cluster deployment), use
-    ``checkpoint()``: blocks live in the fault-tolerant store and survive
-    executor loss mid-loop. Otherwise fall back to ``localCheckpoint()``
-    (executor-local blocks — fine for single-node and tests, lost on
-    executor death; see docs/SCALE.md)."""
-    sc = df.sparkSession.sparkContext
-    if sc.getCheckpointDir() is not None:
-        return df.checkpoint(eager=True)
-    return df.localCheckpoint(eager=True)
-
-
 # recursive transitive closure over the Jaccard pair graph -> per-node
 # min-reachable-id component labels; shared by the connected-components
 # oracle and the keep-list oracle
@@ -700,7 +689,7 @@ def _cc_label_propagation(
     # is one aggregate over the edge list (every node appears as a dst in
     # the symmetric edge set) — no join, and star-shaped components are
     # already converged before the loop begins
-    labels = _truncate_lineage(
+    labels = truncate_lineage(
         edges.groupBy(F.col("d").alias("doc_id")).agg(
             F.least(F.min("s"), F.min("d")).alias("comp")
         )
@@ -722,7 +711,7 @@ def _cc_label_propagation(
             .groupBy(F.col("d").alias("doc_id"))
             .agg(F.min("comp").alias("mcomp"))
         )
-        nxt = _truncate_lineage(
+        nxt = truncate_lineage(
             labels.join(msgs, "doc_id", "left").select(
                 "doc_id",
                 F.least(F.col("comp"), F.coalesce("mcomp", "comp")).alias("comp"),
@@ -756,7 +745,7 @@ def _cc_two_phase(edges: DataFrame, max_rounds: int = 60) -> tuple[DataFrame, in
     Extra (u, min) edges are emitted in both phases: they stay inside
     u's component (min is in u's closed neighborhood), never merge
     components, and speed contraction."""
-    e = _truncate_lineage(edges.select("s", "d").where(F.col("s") != F.col("d")).distinct())
+    e = truncate_lineage(edges.select("s", "d").where(F.col("s") != F.col("d")).distinct())
     prev = None
     rounds = 0
     converged = False
@@ -789,7 +778,7 @@ def _cc_two_phase(edges: DataFrame, max_rounds: int = 60) -> tuple[DataFrame, in
             .select(F.col("d").alias("s"), F.col("m").alias("d"))
             .union(mins2.select("s", F.col("m").alias("d")))
         )
-        nxt = _truncate_lineage(small.where(F.col("s") != F.col("d")).distinct())
+        nxt = truncate_lineage(small.where(F.col("s") != F.col("d")).distinct())
         # fixpoint = edge set unchanged (count + order-free content hash;
         # bit_xor over xxhash64 cannot overflow under ANSI arithmetic)
         chk = tuple(
@@ -856,7 +845,7 @@ def dedup_connected_components(
     )
     # cache the edge list: it is re-scanned every propagation round, and
     # recomputing the shingle self-join per round would dominate
-    edges = _truncate_lineage(edges)
+    edges = truncate_lineage(edges)
     if algorithm == "two_phase":
         labels, _ = _cc_two_phase(edges)
     elif algorithm == "label_propagation":
@@ -1118,7 +1107,7 @@ def doc_boilerplate_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     guarded = F.when(F.size(toks) >= w, grams).otherwise(
         F.array().cast("array<string>")
     )
-    win = _truncate_lineage(
+    win = truncate_lineage(
         spread(docs, "doc_id").select("doc_id", F.explode(guarded).alias("passage_sha"))
     )
     dup = (
@@ -1334,8 +1323,6 @@ def chunk_dedup_reconstruct(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("dedup", "llm", "prefix-filter"),
 )
 def prefix_filter_jaccard_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from weather_stream_processor_spark.plans.caching import persisted_result
-
     t, p, q = _jaccard_rational()
     h = _prefix_filter_postings(spark, sf_dir)
     # persisted via persisted_result: the hashed posting list feeds FOUR
@@ -1343,8 +1330,7 @@ def prefix_filter_jaccard_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the cache each replays the scan + shingle explode + hash (measured
     # 4.4x cold wall). The wrapper materializes the (small) verified pair
     # set and releases the cache, so repeated invocations in a long-lived
-    # session leak nothing (r3 advice). Plan-shape tests inspect the lazy
-    # tree via prefix_filter_lazy_plan.
+    # session leak nothing (r3 advice).
     return persisted_result(h, lambda hp: _prefix_filter_tree(hp, t, p, q))
 
 
@@ -1372,18 +1358,7 @@ def _prefix_filter_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def prefix_filter_lazy_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The un-materialized plan of prefix_filter_jaccard_join — no
-    persist, no lineage cut — for plan-shape inspection in tests."""
-    t, p, q = _jaccard_rational()
-    return _prefix_filter_tree(
-        _prefix_filter_postings(spark, sf_dir), t, p, q, cut_sets=False
-    )
-
-
-def _prefix_filter_tree(
-    h: DataFrame, t: float, p: int, q: int, cut_sets: bool = True
-) -> DataFrame:
+def _prefix_filter_tree(h: DataFrame, t: float, p: int, q: int) -> DataFrame:
     # r11 (guide §2.4: two operations keyed the same way share one
     # exchange): document frequency used to be groupBy("h") + join back
     # onto the postings — TWO shuffles of the token-scale posting table
@@ -1476,12 +1451,9 @@ def _prefix_filter_tree(
     # exchange + collect_list) physically executed twice. Lineage-cut the
     # O(docs)-rows-of-longs index once; interleaved min-of A/B: sf0.1
     # 2.97 → 1.76 s, 10x replica 7.88 → 6.49 s (same-session pairs).
-    # cut_sets=False is the lazy plan-test twin (prefix_filter_lazy_plan).
-    sets = h.groupBy("doc_id").agg(F.collect_list("h").alias("hs"))
-    if cut_sets:
-        from weather_stream_processor_spark.plans.caching import truncate_lineage
-
-        sets = truncate_lineage(sets)
+    sets = truncate_lineage(
+        h.groupBy("doc_id").agg(F.collect_list("h").alias("hs"))
+    )
     pa = sets.select(F.col("doc_id").alias("doc_a"), F.col("hs").alias("sh_a"))
     pb = sets.select(F.col("doc_id").alias("doc_b"), F.col("hs").alias("sh_b"))
     inter = (
@@ -1856,7 +1828,7 @@ def _simhash_pairs_core(sh: DataFrame) -> DataFrame:
     lineage-cut it here so the pipeline runs ONCE for the registered
     query AND for the cascade's SimHash tier (A/B at sf0.1:
     3.01 → 1.70 s cold)."""
-    sh = _truncate_lineage(sh)
+    sh = truncate_lineage(sh)
     blocks = sh.select(
         "doc_id",
         "simhash",
@@ -1973,7 +1945,7 @@ def cross_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # consumer. One (string, long) row per distinct source-shingle —
     # lineage-cut so the corpus-scale stages run once (A/B at sf0.1:
     # 1.52 → 1.26 s cold).
-    sh = _truncate_lineage(
+    sh = truncate_lineage(
         spread(docs, "doc_id").select(
             "source", F.explode(guarded).alias("h")
         ).distinct()
@@ -2780,7 +2752,6 @@ def linkage_agreement_patterns(spark: SparkSession, sf_dir: str) -> DataFrame:
             for f, e in exprs.items()
         ]
     )
-    from weather_stream_processor_spark.plans.caching import persisted_result
 
     ag_cols = [f"ag_{f}" for f in _FS_FIELDS]
     cells = pairs.groupBy(*ag_cols).agg(F.count(F.lit(1)).alias("observed"))
@@ -2912,7 +2883,6 @@ def fellegi_sunter_em_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = load_table(spark, sf_dir, "supplier").select(
         "s_suppkey", "s_name", "s_acctbal", "s_nationkey"
     )
-    from weather_stream_processor_spark.plans.caching import persisted_result
 
     exprs = _fs_agree_exprs_sql()
     pairs = c.join(s, c.c_nationkey == s.s_nationkey).select(
@@ -3154,7 +3124,7 @@ def _cdc_dedup_tail(fps: DataFrame) -> DataFrame:
     registered form) physically ran twice. The frame is four longs per
     chunk — lineage-cut it so the Python stage runs ONCE (A/B sf0.1:
     1.50 → 1.15 s)."""
-    fps = _truncate_lineage(fps)
+    fps = truncate_lineage(fps)
     occ = fps.groupBy("fp", "chunk_len").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_occ")
     )

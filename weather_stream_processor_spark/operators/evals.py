@@ -957,19 +957,6 @@ def t_closeness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return persisted_result(cells, _t_closeness_tree)
 
 
-def t_closeness_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Un-materialized t-closeness plan for plan-shape tests."""
-    docs = load_table(spark, sf_dir, "documents")
-    cells = docs.groupBy(
-        "lang",
-        F.floor(F.col("n_chars") / _LDIV_LEN_BUCKET)
-        .cast("bigint")
-        .alias("len_bucket"),
-        "source",
-    ).agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-    return _t_closeness_tree(cells)
-
-
 def _t_closeness_tree(cells: DataFrame) -> DataFrame:
     tot = cells.groupBy("lang", "len_bucket").agg(
         F.sum("n").cast("bigint").alias("n_docs")

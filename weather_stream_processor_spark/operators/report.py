@@ -432,7 +432,7 @@ def _release_oracle() -> str:
 )
 def release_audit_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    flags = release_audit_flags_plan(spark, sf_dir, docs)
+    flags = _release_audit_flags(spark, sf_dir, docs)
     # r11 (guide §2.4): `flags` feeds TWO aggregations (per-gate distinct
     # counts and the any-gate distinct count), so the physical plan
     # duplicated the ENTIRE seven-gate union — 45 parquet scans / 72
@@ -442,7 +442,7 @@ def release_audit_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fully-parallel union job) and both report aggregates consume the
     # checkpoint scan. Same shape as dedup_cascade_report's per_doc cut.
     # The bounded joins that execute inside this checkpoint job are
-    # audited on the LAZY twin by test_release_audit_gate_union_surface
+    # audited under lazy_cuts() by test_release_audit_gate_union_surface
     # (r11 advice: eager cuts must not shrink guard coverage).
     flags = truncate_lineage(flags)
     n_docs = docs.count()  # 1-row driver scalar, bounded (cascade precedent)
@@ -482,19 +482,12 @@ def release_audit_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def release_audit_flags_plan(
-    spark: SparkSession, sf_dir: str, docs: DataFrame | None = None
+def _release_audit_flags(
+    spark: SparkSession, sf_dir: str, docs: DataFrame
 ) -> DataFrame:
-    """The seven-gate flags union, UN-truncated — the lazy twin the join
-    guard inspects (the registered query cuts it, which would otherwise
-    hide the gates' bounded joins from the plan screens). The gate
-    builders themselves may still execute eagerly (their own internal
-    cuts); what stays lazy here is the union + g1/g7 join layer this
-    operator adds."""
+    """The seven-gate flags union: (gate_rank, gate, doc_id) per flag."""
     from pyspark.sql.window import Window
 
-    if docs is None:
-        docs = load_table(spark, sf_dir, "documents")
     digs = docs.select("doc_id", F.sha2("text", 256).alias("dig"))
     keeper = F.min("doc_id").over(Window.partitionBy("dig"))
 

@@ -2213,8 +2213,6 @@ def _kcenter_oracle(k: int) -> str:
     tags=("similarity", "llm", "sampling", "iterative", "scale"),
 )
 def kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from weather_stream_processor_spark.operators.dedup import _truncate_lineage
-
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     first = emb.agg(F.min("vec_id")).collect()[0][0]  # 1-row bounded
 
@@ -2232,7 +2230,7 @@ def kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     cvec = emb.filter(F.col("vec_id") == first).collect()[0].embedding
-    cur = _truncate_lineage(
+    cur = truncate_lineage(
         emb.select("vec_id", "embedding", dist_to(cvec).alias("dmin"))
     )
     trace = [(0, int(first), 0.0)]
@@ -2246,7 +2244,7 @@ def kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         trace.append((r, int(far.vec_id), float(far.dmin)))
         if r < KCENTER_K - 1:
-            cur = _truncate_lineage(
+            cur = truncate_lineage(
                 cur.select(
                     "vec_id",
                     "embedding",

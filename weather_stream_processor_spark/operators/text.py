@@ -2506,28 +2506,8 @@ def textrank_keyphrases(spark: SparkSession, sf_dir: str) -> DataFrame:
     return persisted_result(und, _textrank_tree)
 
 
-def textrank_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Un-materialized textrank plan for plan-shape tests — ``cut=False``
-    keeps the whole union/groupBy edge-build subplan lazy so the tests
-    inspect it, not just the post-checkpoint rounds (r11 advice; the
-    pagerank lazy-twin convention)."""
-    docs = load_table(spark, sf_dir, "documents")
-    bigrams = docs.select(F.explode(F.expr(_BIGRAM_EXPR)).alias("bigram"))
-    und = (
-        bigrams.select(
-            F.split("bigram", " ")[0].alias("a"),
-            F.split("bigram", " ")[1].alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.count(F.lit(1)).cast("double").alias("w"))
-        .filter(F.col("w") >= _TR_MIN_COOC)
-    )
-    return _textrank_tree(und, cut=False)
-
-
-def _textrank_tree(und: DataFrame, cut: bool = True) -> DataFrame:
-    from weather_stream_processor_spark.operators.dedup import _truncate_lineage
+def _textrank_tree(und: DataFrame) -> DataFrame:
+    from weather_stream_processor_spark.plans.caching import truncate_lineage
 
     # r11 (guide §2.2/§2.6): the unionAll doubles the persisted und's
     # partition count (32+32 = 64), and every one of the ~11 sequential
@@ -2539,14 +2519,11 @@ def _textrank_tree(und: DataFrame, cut: bool = True) -> DataFrame:
     # 100 TB — REPARTITION_BY_COL allows coalescing), and the lineage
     # cut materializes it once for every round. A/B at sf0.01
     # (interleaved min-of-3): 8.33 → 2.42 s, outputs identical.
-    # ``cut=False`` (the lazy plan twin) skips only the materialization.
-    edges = (
+    edges = truncate_lineage(
         und.select(F.col("a").alias("src"), F.col("b").alias("dst"), "w")
         .unionAll(und.select(F.col("b").alias("src"), F.col("a").alias("dst"), "w"))
         .repartition("src")
     )
-    if cut:
-        edges = _truncate_lineage(edges)
     wdeg = edges.groupBy(F.col("src").alias("term")).agg(
         F.sum("w").alias("wdeg")
     )

@@ -1,23 +1,52 @@
-"""Cache-scope helpers: persist an input for a multi-pass plan WITHOUT
-leaking the cached partitions past the query's own execution.
+"""Lineage cuts: the one module that knows how a plan is cut.
 
-Round-3 advice: ``prefix_filter_jaccard_join`` and ``rfm_segments`` both
-persisted a shared intermediate (postings / per-customer aggregate) that
-feeds several subtrees, and never unpersisted it — every invocation in a
-long-lived session (bench passes, parity sweeps, repeated user calls)
-stacked another session-lifetime copy in executor memory. The fix is a
-materialization boundary: build the result over the cached input, force
-it eagerly with a lineage cut, then release the cache before returning.
-The caller receives a consumable DataFrame whose storage cost is
-O(result), not O(cached input), and the session ends the query with zero
-extra cached partitions.
+The cut rule. An operator cuts a frame's lineage when the frame is
+consumed more than once (several subtrees, or every round of an iterative
+loop) and Catalyst would otherwise re-execute its whole subplan per
+consumer. Only bounded frames are cut — O(result), per-doc index, or
+domain-grid sized, never corpus text — so the materialized blocks cost
+O(result) storage. Operators cut through exactly two helpers:
+
+- ``truncate_lineage(df)``: an eager checkpoint of ``df``;
+- ``persisted_result(x, build)``: ``build`` over a persisted copy of
+  ``x`` (for a multi-consumer INPUT), the result cut eagerly and the
+  cache released before returning. Round-3 advice: a bare ``persist()``
+  stacked a session-lifetime cached copy per invocation in a long-lived
+  session; the wrapper ends every query with zero extra cached
+  partitions.
+
+``lazy_cuts()`` turns both helpers into identities for the current
+context: ``truncate_lineage(df)`` returns ``df`` and
+``persisted_result(x, build)`` returns ``build(x)``, nothing persisted or
+materialized. Plan tests build a registered operator inside it to
+inspect the whole lazy tree the eager builder would otherwise hide behind
+checkpoint scans. The mode is a ``ContextVar``: threads started inside
+the context (a builder's own pool, a parallel registry walk) do not
+inherit it and keep cutting eagerly. Outside the context the helpers
+behave exactly as they always have.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import contextlib
+import contextvars
+from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame
+
+_LAZY: contextvars.ContextVar[bool] = contextvars.ContextVar(
+    "lazy_cuts", default=False
+)
+
+
+@contextlib.contextmanager
+def lazy_cuts() -> Iterator[None]:
+    """Make every cut in this context an identity (plan inspection only)."""
+    token = _LAZY.set(True)
+    try:
+        yield
+    finally:
+        _LAZY.reset(token)
 
 
 def truncate_lineage(df: DataFrame) -> DataFrame:
@@ -25,13 +54,16 @@ def truncate_lineage(df: DataFrame) -> DataFrame:
 
     When a reliable checkpoint dir is configured (``sc.setCheckpointDir``
     — the cluster deployment), use ``checkpoint()``: blocks live in the
-    fault-tolerant store and survive executor loss. Checkpoint FILES are
-    reclaimed when the RDD is GC'd because the session factory sets
-    ``spark.cleaner.referenceTracking.cleanCheckpoints=true`` (the Spark
-    default of false would leak one directory per invocation). Otherwise
-    fall back to ``localCheckpoint()`` (executor-local blocks — fine for
-    single-node and tests, lost on executor death; see docs/SCALE.md).
+    fault-tolerant store and survive executor loss mid-loop. Checkpoint
+    FILES are reclaimed when the RDD is GC'd because the session factory
+    sets ``spark.cleaner.referenceTracking.cleanCheckpoints=true`` (the
+    Spark default of false would leak one directory per invocation).
+    Otherwise fall back to ``localCheckpoint()`` (executor-local blocks —
+    fine for single-node and tests, lost on executor death; see
+    docs/SCALE.md). Under ``lazy_cuts()`` returns ``df`` unchanged.
     """
+    if _LAZY.get():
+        return df
     sc = df.sparkSession.sparkContext
     if sc.getCheckpointDir() is not None:
         return df.checkpoint(eager=True)
@@ -63,9 +95,11 @@ def persisted_result(
     Use when ``build`` consumes its input in SEVERAL subtrees (so the
     persist is worth it) and the result is small relative to the input
     (so materializing it is cheap). The returned DataFrame is a
-    checkpoint scan — callers needing the *lazy* plan for inspection
-    should build it directly without this wrapper (the plan tests do).
+    checkpoint scan; under ``lazy_cuts()`` it is ``build(input_df)``
+    itself, with no persist.
     """
+    if _LAZY.get():
+        return build(input_df)
     cached = input_df.persist()
     try:
         return truncate_lineage(build(cached))

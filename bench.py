@@ -154,6 +154,63 @@ def materialize(df) -> None:
     df.write.mode("overwrite").format("noop").save()
 
 
+class PlanTimeCounters:
+    """Plan-time work per pass, read over py4j (no UI, no listener).
+
+    - ``codegen_compilations`` / ``codegen_compile_ms``: Janino compiles,
+      i.e. misses of the JVM-wide whole-stage codegen cache, from
+      ``CodegenMetrics`` and ``CodeGenerator.compileTime``;
+    - ``schema_inference_jobs``: parquet footer-inference jobs, which the
+      status store names ``parquet at <call site>``.
+
+    The status store keeps only the newest ``spark.ui.retainedJobs``
+    (1000) jobs, so ``tick()`` after every query keeps a pass's job scan
+    inside that window.
+    """
+
+    def __init__(self, spark) -> None:
+        jvm = spark.sparkContext._jvm
+        self._hist = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+        self._gen = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+        self._sc = spark.sparkContext._jsc.sc()
+        self._conv = jvm.scala.jdk.javaapi.CollectionConverters
+        self._last_job = -1
+        self.begin()
+
+    def _codegen(self) -> tuple[int, float]:
+        return self._hist.getCount(), self._gen.compileTime() / 1e6
+
+    def _inference_jobs(self) -> int:
+        """Inference jobs started since the previous scan."""
+        self._sc.listenerBus().waitUntilEmpty()
+        n, last = 0, self._last_job
+        # newest first: the store lists jobs in descending id order
+        for j in self._conv.asJava(self._sc.statusStore().jobsList(None)):
+            if j.jobId() <= self._last_job:
+                break
+            last = max(last, j.jobId())
+            n += j.name().startswith("parquet at ")
+        self._last_job = last
+        return n
+
+    def begin(self) -> None:
+        self._inference_jobs()
+        self._infer = 0
+        self._c0 = self._codegen()
+
+    def tick(self) -> None:
+        self._infer += self._inference_jobs()
+
+    def end(self) -> dict:
+        self.tick()
+        n, ms = self._codegen()
+        return {
+            "codegen_compilations": n - self._c0[0],
+            "codegen_compile_ms": round(ms - self._c0[1], 1),
+            "schema_inference_jobs": self._infer,
+        }
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).removeprefix("sf") or "0.1")
@@ -209,12 +266,20 @@ def main() -> None:
     ).write.mode("overwrite").format("noop").save()
     calib_py = round(time.perf_counter() - t0, 3)
 
-    def run_pass(at_dir: str) -> dict[str, float]:
+    # plan-time work of each pass: codegen compilations and schema
+    # inference jobs, read between queries, outside every timed window
+    counters = PlanTimeCounters(spark)
+    plan_time: dict[str, dict] = {}
+
+    def run_pass(at_dir: str, label: str) -> dict[str, float]:
         timings: dict[str, float] = {}
+        counters.begin()
         for name in HEADLINE:
             t0 = time.perf_counter()
             materialize(specs[name].builder(spark, at_dir))
             timings[name] = round(time.perf_counter() - t0, 3)
+            counters.tick()
+        plan_time[label] = counters.end()
         return timings
 
     # two passes, per-query MIN: this host is shared and single-pass wall
@@ -223,7 +288,7 @@ def main() -> None:
     # passes are recorded (queries_passes) so a cross-round delta can be
     # attributed: min within the pass-to-pass spread = scheduling noise;
     # min outside it = a real plan change (r3 verdict task 4).
-    p1, p2 = run_pass(sf_dir), run_pass(sf_dir)
+    p1, p2 = run_pass(sf_dir, "p1"), run_pass(sf_dir, "p2")
     timings = {k: min(p1[k], p2[k]) for k in p1}
     out = {
         "metric": "headline_queries_total_wall",
@@ -235,11 +300,12 @@ def main() -> None:
         "calib_sec": calib,
         "calib_py_sec": calib_py,
         "agg": "min_of_2_passes",
+        "plan_time_passes": plan_time,
     }
 
     sf2_dir = os.environ.get("SPARK_GRAFT_SF_DIR2", "/root/testdata/sf0.01")
     if sf2_dir and os.path.isdir(sf2_dir) and sf2_dir != sf_dir:
-        timings2 = run_pass(sf2_dir)
+        timings2 = run_pass(sf2_dir, "secondary")
         out["sf_secondary"] = float(
             os.path.basename(sf2_dir.rstrip("/")).removeprefix("sf") or "0"
         )
@@ -269,6 +335,7 @@ def main() -> None:
         sf1_queries = SF1_QUERIES
         timings1x = {}
         out_rows = {}
+        counters.begin()
         for name in sf1_queries:
             # builder() must sit INSIDE the timed window: persisted_result
             # operators execute eagerly at build time, so timing only the
@@ -280,6 +347,8 @@ def main() -> None:
             # untimed count on the SAME DataFrame: re-invoking builder()
             # would eagerly re-run the heaviest pipelines a second time
             out_rows[name] = df.count()
+            counters.tick()
+        plan_time["third"] = counters.end()
         out["sf_third"] = round(sf * k, 3)
         out["value_third"] = round(sum(timings1x.values()), 3)
         out["queries_third"] = timings1x

@@ -85,3 +85,29 @@ def test_contraction_gate_measures_dup_rate(spark):
         .toString()
     )
     assert "Union" in p_dup
+
+
+def test_contraction_expansion_joins_are_sized_by_the_planner(spark):
+    """The expansion joins read the doc-scale (doc_id, rep_id) class map
+    without a broadcast hint, so a map above the broadcast threshold
+    shuffles (here forced with a -1 threshold) and still gives the exact
+    pairs, instead of a forced broadcast failing on a large corpus."""
+    docs = _dup_heavy_docs(spark)
+    want = {
+        (r.doc_a, r.doc_b): r.jaccard
+        for r in _ngram_jaccard_core(docs, contract=False).collect()
+    }
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        pairs = _ngram_jaccard_core(docs, contract=True)
+        qe = pairs._jdf.queryExecution()
+        assert "strategy=broadcast" not in qe.optimizedPlan().toString()
+        plan = qe.executedPlan().toString()
+        assert "Broadcast" not in plan
+        assert "SortMergeJoin" in plan
+        got = {(r.doc_a, r.doc_b): r.jaccard for r in pairs.collect()}
+    finally:
+        spark.conf.set(key, old)
+    assert got == want

@@ -277,13 +277,15 @@ def _ngram_jaccard_core(docs: DataFrame, contract: bool | None = None) -> DataFr
     # expansion back to doc-level pairs: class members inherit their
     # rep pair's jaccard (identical sets), ordered least/greatest; pairs
     # WITHIN a class are exact duplicates (jaccard exactly 1.0 >= t).
-    # Both joins are output-scale x class-membership — broadcast of the
-    # doc-scale (doc_id, rep_id) map, never a corpus shuffle.
+    # The joins read the doc-scale (doc_id, rep_id) map with no broadcast
+    # hint: the planner sizes it from the cut's stats (and AQE from the
+    # runtime size), so a small map broadcasts and a large, dup-heavy
+    # corpus's map shuffles instead of failing the broadcast.
     ma = cls.select(F.col("rep_id").alias("ra"), F.col("doc_id").alias("xa"))
     mb = cls.select(F.col("rep_id").alias("rb"), F.col("doc_id").alias("xb"))
     cross = (
-        rep_pairs.join(F.broadcast(ma), F.col("doc_a") == F.col("ra"))
-        .join(F.broadcast(mb), F.col("doc_b") == F.col("rb"))
+        rep_pairs.join(ma, F.col("doc_a") == F.col("ra"))
+        .join(mb, F.col("doc_b") == F.col("rb"))
         .select(
             F.least("xa", "xb").alias("doc_a"),
             F.greatest("xa", "xb").alias("doc_b"),
@@ -291,7 +293,7 @@ def _ngram_jaccard_core(docs: DataFrame, contract: bool | None = None) -> DataFr
         )
     )
     intra = ma.join(
-        F.broadcast(mb), (F.col("ra") == F.col("rb")) & (F.col("xa") < F.col("xb"))
+        mb, (F.col("ra") == F.col("rb")) & (F.col("xa") < F.col("xb"))
     ).select(
         F.col("xa").alias("doc_a"),
         F.col("xb").alias("doc_b"),

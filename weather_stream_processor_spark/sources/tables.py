@@ -11,6 +11,7 @@ never pre-``collect`` or pre-cache here.
 from __future__ import annotations
 
 import os
+import stat
 import weakref
 
 from pyspark.sql import DataFrame, SparkSession
@@ -65,11 +66,70 @@ def ensure_session_defaults(spark: SparkSession) -> None:
 _DEFAULTED_SESSIONS: weakref.WeakSet = weakref.WeakSet()
 
 
+# confs that change what parquet schema inference returns for one file
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+)
+
+# session -> {(path, inference confs, file identity): inferred StructType}
+_SCHEMAS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _file_identity(path: str) -> tuple | None:
+    """(inode, mtime_ns, size) of a file; for a directory, the same for
+    each data file under it (Spark's hidden ``_``/``.`` names skipped).
+    None when ``os.stat`` cannot see the path (``s3a://`` and friends)."""
+    try:
+        st = os.stat(path)
+        if not stat.S_ISDIR(st.st_mode):
+            return (st.st_ino, st.st_mtime_ns, st.st_size)
+        parts = []
+        for root, dirs, files in os.walk(path):
+            dirs[:] = sorted(d for d in dirs if not _hidden(d))
+            for f in sorted(f for f in files if not _hidden(f)):
+                fst = os.stat(os.path.join(root, f))
+                parts.append((root, f, fst.st_ino, fst.st_mtime_ns, fst.st_size))
+        return tuple(parts)
+    except OSError:  # not a local path, or a part file vanished mid-walk
+        return None
+
+
+def _hidden(name: str) -> bool:
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
+def parquet_scan(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers the schema once per session.
+
+    Inference is one Spark job (~55 ms) that reads a file footer, and
+    builders load the same few files many times per session. The schema
+    Spark inferred is memoized per session under
+    the inference confs and the file identity, and later reads pass it
+    with ``spark.read.schema``. A rewritten file or a flipped conf is a
+    new key; a path ``os.stat`` cannot see infers on every call.
+    """
+    identity = _file_identity(path)
+    if identity is None:
+        return spark.read.parquet(path)
+    key = (path, tuple(spark.conf.get(c) for c in _INFERENCE_CONFS), identity)
+    memo = _SCHEMAS.setdefault(spark, {})
+    schema = memo.get(key)
+    if schema is None:
+        df = spark.read.parquet(path)
+        memo[key] = df.schema
+        return df
+    return spark.read.schema(schema).parquet(path)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     ensure_session_defaults(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = parquet_scan(spark, os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events":
         # `ts` is TIMESTAMP(NANOS) in the fixture parquet; with
         # spark.sql.legacy.parquet.nanosAsLong it arrives as epoch-nanos

@@ -46,30 +46,20 @@ def _as_stream_dir(parquet_file: str) -> str:
     return d
 
 
-# (path, mtime_ns, size) -> StructType; see events_replay_source
-_SCHEMA_MEMO: dict = {}
-
-
 def events_replay_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming DataFrame over `events` with the same schema/columns the
     batch loader produces (ts restored from nanos to TimestampType)."""
     from weather_stream_processor_spark.sources import ensure_session_defaults
+    from weather_stream_processor_spark.sources.tables import parquet_scan
 
     ensure_session_defaults(spark)
     path = os.path.join(sf_dir, "events.parquet")
     # TIMESTAMP(NANOS) fixtures arrive as LongType (via nanosAsLong) and need
     # the nanos->micros restore; micros fixtures arrive as TimestampType
-    # already (NTZ inference pinned off) and pass through untouched.
-    # The schema is parquet-footer METADATA, not a result: memoized per
-    # (path, mtime, size) so repeated replay builders skip the batch read
-    # that only existed to sniff the ts encoding (r12; the same class of
-    # caching Spark itself does for file listings).
-    stat = os.stat(path)
-    memo_key = (path, stat.st_mtime_ns, stat.st_size)
-    schema = _SCHEMA_MEMO.get(memo_key)
-    if schema is None:
-        schema = spark.read.parquet(path).schema
-        _SCHEMA_MEMO[memo_key] = schema
+    # already (NTZ inference pinned off) and pass through untouched. The
+    # schema comes from the session's parquet schema memo, which a batch
+    # load_table of the same file has usually filled already.
+    schema = parquet_scan(spark, path).schema
     stream = spark.readStream.schema(schema).parquet(_as_stream_dir(path))
     from pyspark.sql import types as T
 

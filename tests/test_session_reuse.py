@@ -7,6 +7,11 @@
   per-session memo, so a file the session has read is not re-inferred
   until it is rewritten or an inference conf changes.
 
+- Streaming checkpoints: a local session writes them through Spark's
+  FileSystem-based checkpoint manager, which renames without the
+  ``readlink`` fork per call that the FileContext default costs when
+  libhadoop is absent.
+
 Compilations and inference jobs are counted with ``bench.PlanTimeCounters``
 (CodegenMetrics and the status store, no UI).
 """
@@ -116,3 +121,14 @@ def test_replay_source_reuses_the_load_table_schema(spark, counters, tmp_path):
     assert n == 0
     assert stream[0].isStreaming
     assert stream[0].schema == batch.schema
+
+
+def test_local_checkpoints_use_the_filesystem_manager(spark, tmp_path):
+    jvm = spark._jvm
+    managers = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    # the Hadoop conf a streaming query hands its checkpoint layer: the
+    # session's SQL confs on top of the context's Hadoop conf
+    hadoop_conf = spark._jsparkSession.sessionState().newHadoopConf()
+    path = jvm.org.apache.hadoop.fs.Path(f"file:{tmp_path}")
+    manager = managers.CheckpointFileManager.create(path, hadoop_conf)
+    assert manager.getClass().getSimpleName() == "FileSystemBasedCheckpointFileManager"

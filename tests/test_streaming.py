@@ -38,11 +38,54 @@ def test_foreach_batch_parquet_sink_is_checkpointed_and_idempotent(spark):
     first = spark.read.parquet(f"{out}/batch_id=*").count()
     assert first > 0
 
+    # both checksum layers: Spark's checkpoint checksum (N.delta.crc) and
+    # Hadoop's checksum file (.N.delta.crc) beside every state delta
+    deltas = [
+        os.path.join(root, f)
+        for root, _, files in os.walk(os.path.join(ckpt, "state"))
+        for f in files
+        if f.endswith(".delta")
+    ]
+    assert deltas
+    for delta in deltas:
+        d, f = os.path.split(delta)
+        assert os.path.exists(f"{delta}.crc"), delta
+        assert os.path.exists(os.path.join(d, f".{f}.crc")), delta
+
     # restart with the SAME checkpoint: offsets are committed, so the
     # replayed source has nothing new -> no further batches written
     run_foreach_batch(build(), foreach_batch_parquet_writer(out), ckpt, "update")
     second = spark.read.parquet(f"{out}/batch_id=*").count()
     assert second == first
+
+
+@pytest.mark.parametrize("runner", ["memory", "foreach_batch"])
+def test_bounded_replay_that_times_out_is_stopped_and_raises(spark, tmp_path, runner):
+    from weather_stream_processor_spark.streaming.replay import run_to_memory
+    from weather_stream_processor_spark.streaming.sinks import run_foreach_batch
+
+    src = tmp_path / "src"
+    for i in range(4):
+        spark.range(i * 10, i * 10 + 10).coalesce(1).write.parquet(f"{src}/f{i}.parquet")
+    stream = (
+        spark.readStream.schema("id long")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(f"{src}/*.parquet")
+        .groupBy((F.col("id") % 3).alias("k"))
+        .count()
+    )
+    before = {q.id for q in spark.streams.active}
+    name = f"timeout_{runner}_{int(time.time() * 1000)}"
+    with pytest.raises(TimeoutError, match="did not drain") as err:
+        if runner == "memory":
+            run_to_memory(stream, name, timeout_s=0.01)
+        else:
+            run_foreach_batch(
+                stream, lambda df, i: None, str(tmp_path / "ckpt"), timeout_s=0.01
+            )
+    if runner == "memory":
+        assert name in str(err.value)
+    assert {q.id for q in spark.streams.active} == before
 
 
 def test_watermark_drops_late_data_in_append_mode(spark):

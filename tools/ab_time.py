@@ -1,9 +1,10 @@
 """Quick per-query timing harness for optimization A/B runs.
 
 Usage: python tools/ab_time.py name [name ...]
-Warms the session like bench.py, prints the JVM calib probe, then times
-each query (builder + noop materialization, the bench's exact timed
-region) for 3 passes and prints min/all.
+Warms the session like bench.py, prints the JVM calib probe, then runs 3
+passes; each pass times every named query once (builder + noop
+materialization, the bench's exact timed region), so JIT warm-up, GC and
+host drift fall on all queries alike. Prints min/all passes per query.
 """
 
 from __future__ import annotations
@@ -40,13 +41,14 @@ def main() -> None:
     spark.range(400_000_000).selectExpr("sum(id * 2 + 1)").collect()
     print(f"calib: {time.perf_counter() - t0:.3f}s", flush=True)
 
-    for name in names:
-        walls = []
-        for _ in range(3):
+    walls: dict[str, list[float]] = {name: [] for name in names}
+    for _ in range(3):
+        for name in names:
             t0 = time.perf_counter()
             materialize(specs[name].builder(spark, sf_dir))
-            walls.append(round(time.perf_counter() - t0, 3))
-        print(f"{min(walls):8.3f}s  passes={walls}  {name}", flush=True)
+            walls[name].append(round(time.perf_counter() - t0, 3))
+    for name, w in walls.items():
+        print(f"{min(w):8.3f}s  passes={w}  {name}", flush=True)
 
 
 if __name__ == "__main__":

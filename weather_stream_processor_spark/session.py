@@ -2,10 +2,11 @@
 
 Defaults are tuned for the test harness (local[N], one JVM) but every
 setting is the one you would also want on a 1000-executor cluster against
-~100 TB: AQE on (runtime shuffle coalescing + skew-join splitting),
-UTC session timezone (oracle comparability), Arrow for the few Pandas-UDF
-operators, and shuffle partitions sized to the parallelism at hand rather
-than the 200 default.
+~100 TB: AQE on (runtime shuffle coalescing + skew-join splitting for
+batch queries), UTC session timezone (oracle comparability), Arrow for the
+few Pandas-UDF operators, and shuffle partitions sized to the parallelism
+at hand rather than the 200 default. The one local-only setting is the
+streaming checkpoint file manager (see ``get_spark``).
 """
 
 from __future__ import annotations
@@ -24,9 +25,15 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with scale-aware defaults.
 
-    On a real cluster, drop ``master`` and let spark-submit supply it; AQE
-    then re-sizes shuffles at runtime so ``shuffle_partitions`` is only the
-    upper bound for the coalescer.
+    ``master=None`` always builds ``local[SPARK_GRAFT_CPUS]``; to run on a
+    cluster, pass the cluster's master URL.
+
+    ``shuffle_partitions`` is the width of every shuffle AQE does not
+    re-size. For batch queries AQE coalesces it at runtime, so it acts as
+    an upper bound there. Stateful streaming queries run with AQE off, and
+    their first batch writes this width into the checkpoint as the
+    state-store partition count: a query restarted from that checkpoint
+    keeps the old width whatever the session now says.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if master is None:
@@ -84,6 +91,30 @@ def get_spark(
         # into the checkpoint store for the session lifetime
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
     )
+    if master.startswith("local"):
+        # Streaming checkpoints on the local file system: Spark's default
+        # FileContext manager renames through AbstractFileSystem.
+        # renameInternal, which asks for getFileLinkStatus on source and
+        # destination. Without libhadoop, RawLocalFileSystem answers each
+        # of those by forking `readlink` (~6.6 ms a fork on 4 cores):
+        # 1,512 forks in a 17-trigger wire_stream replay, 1,104 of them
+        # for state-store deltas. The FileSystem manager renames with
+        # fs.exists + fs.rename and forks none. On the local FS
+        # renameInternal is itself check-then-rename, so it is no more
+        # atomic; both managers leave the same file set (Hadoop .crc
+        # files and Spark's own *.delta.crc checkpoint checksums), and a
+        # restart from either reads only new input. Measured on 4 cores
+        # (wire_stream): state commit 6.1 s -> 0.45 s of task time,
+        # checkpoint phase 1.1 s -> 0.3 s, op_wall_ms median -24% over 20
+        # interleaved pairs. A cluster keeps Spark's default: checkpoints
+        # there live on HDFS or an object store, where no process is
+        # forked per call. The chmod fork per file create stays; no Spark
+        # conf avoids it.
+        builder = builder.config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -14,6 +14,7 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 
 def _as_stream_dir(parquet_file: str) -> str:
@@ -92,10 +93,11 @@ def events_as_weather_wire(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def run_to_memory(
-    stream_df: DataFrame, name: str, output_mode: str = "complete", timeout_s: int = 300
+    stream_df: DataFrame, name: str, output_mode: str = "complete", timeout_s: float = 300
 ) -> DataFrame:
     """Run a bounded streaming plan to completion into a memory sink and
-    return the result as a batch DataFrame.
+    return the result as a batch DataFrame (``TimeoutError`` if it has not
+    drained after ``timeout_s``; see ``await_drained``).
 
     availableNow + awaitTermination = deterministic, synchronous replay
     through the incremental execution engine (StateStore save/restore,
@@ -109,8 +111,23 @@ def run_to_memory(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout_s)
+    await_drained(q, timeout_s)
+    return spark.table(name)
+
+
+def await_drained(q: StreamingQuery, timeout_s: float) -> None:
+    """Block until a bounded (availableNow) query has drained its input.
+
+    A query still running at the deadline is stopped, so it neither hands
+    a partial result to the caller nor keeps the executors busy, and
+    ``TimeoutError`` names it. A query that failed re-raises its error.
+    """
+    if not q.awaitTermination(timeout_s):
+        q.stop()
+        raise TimeoutError(
+            f"streaming query {q.name!r} (id {q.id}) did not drain within "
+            f"{timeout_s} s; stopped it"
+        )
     ex = q.exception()
     if ex is not None:
         raise ex
-    return spark.table(name)

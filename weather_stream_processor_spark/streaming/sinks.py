@@ -25,6 +25,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 
+from weather_stream_processor_spark.streaming.replay import await_drained
+
 
 def foreach_batch_jdbc_writer(
     url: str,
@@ -275,10 +277,11 @@ def run_foreach_batch(
     sink: Callable[[DataFrame, int], None],
     checkpoint_dir: str,
     output_mode: str = "update",
-    timeout_s: int = 300,
+    timeout_s: float = 300,
 ):
     """Start a checkpointed foreachBatch query with availableNow and block
-    until the replay drains. checkpointLocation is mandatory (fixes Q5)."""
+    until the replay drains (``TimeoutError`` after ``timeout_s``; see
+    ``replay.await_drained``). checkpointLocation is mandatory (fixes Q5)."""
     q = (
         stream_df.writeStream.outputMode(output_mode)
         .foreachBatch(sink)
@@ -286,8 +289,5 @@ def run_foreach_batch(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout_s)
-    ex = q.exception()
-    if ex is not None:
-        raise ex
+    await_drained(q, timeout_s)
     return q
